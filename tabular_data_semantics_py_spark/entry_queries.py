@@ -105,12 +105,6 @@ def _values(rows, cols: str) -> str:
     return f"(VALUES\n{body}\n) AS t({cols})"
 
 
-def _tbl(sf_dir_placeholder: str = "") -> str:
-    # driver pre-registers parquet tables as views; fixture queries
-    # never touch them
-    return sf_dir_placeholder
-
-
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
@@ -130,9 +124,9 @@ def q(name: str, oracle: Callable[[], str] | None = None):
 
 _LAST_SF_DIR: list[str] = []
 
-# parquet-footer probe memo: (path, mtime) → effective scan-split
-# count. Metadata only — never rows or results.
-_RG_MEMO: dict[tuple[str, float], int] = {}
+# parquet-footer probe memo: (path, mtime) → (row groups, rows).
+# Metadata only — never rows or results.
+_RG_MEMO: dict[tuple[str, float], tuple[int, int]] = {}
 
 
 def _effective_splits(path: str) -> tuple[int, int]:
@@ -156,19 +150,13 @@ def _effective_splits(path: str) -> tuple[int, int]:
 
 
 def _load(spark: SparkSession, sf_dir: str, table: str,
-          rebalance: bool = False,
-          columns: list[str] | None = None) -> DataFrame:
+          rebalance: bool = False) -> DataFrame:
     # Record the sf the driver actually drove so scalar-recomputation
     # oracles (minhash signatures, simhash) rebuild over the SAME
     # table — the contract gives oracle_sql() no sf argument.
     _LAST_SF_DIR[:] = [sf_dir]
     path = os.path.join(sf_dir, f"{table}.parquet")
     df = spark.read.parquet(path)
-    if columns is not None:
-        # explicit projection BEFORE a rebalance so the remedial
-        # exchange moves only the columns the query touches (guide
-        # §2.3 "project before the exchange")
-        df = df.select(*columns)
     if rebalance:
         # Unsplittable-input remediation (guide §2.5: "one huge
         # unsplittable file — repartition immediately after the

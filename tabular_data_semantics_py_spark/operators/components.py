@@ -157,3 +157,17 @@ def connected_components(
         .groupBy("node")
         .agg(F.min("component").alias("component"))
     )
+
+
+def canonical_ids(nodes: DataFrame, edges: DataFrame, id_col: str) -> DataFrame:
+    """The survivor-selection tail of corpus canonicalization:
+    ``nodes`` (node) plus near-dup ``edges`` (src, dst) → (id_col,
+    canonical_id, is_canonical), every node mapped to its component's
+    min id and nodes without edges canonical to themselves."""
+    comp = connected_components(edges)
+    canonical = F.coalesce(F.col("component"), F.col("node"))
+    return nodes.join(comp, "node", "left").select(
+        F.col("node").alias(id_col),
+        canonical.alias("canonical_id"),
+        (canonical == F.col("node")).alias("is_canonical"),
+    )

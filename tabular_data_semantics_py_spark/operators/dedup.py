@@ -17,16 +17,21 @@ Scale design notes
   recall is governed by (n_hashes, rows_per_band).
 - SimHash: vectorized numpy pandas UDF (bit tricks don't fit Spark
   expressions cleanly); output is a 64-bit fingerprint column.
+- collapse → pair → expand: duplicate clusters make every pair list
+  quadratic, so the MinHash, SimHash and canonicalization paths pair
+  one representative per group of identical items and expand the
+  verified pairs back to members. ``_collapse``/``_expand`` implement
+  this once, and their docstring holds the exactness argument.
 - canonicalization: ``near_dup_canonicalize`` composes the above with
   connected components into the survivor-selection tail a corpus
   dedup actually needs (pair lists alone don't dedup transitive
-  chains), with a component-preserving duplicate collapse up front.
+  chains).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
@@ -185,6 +190,69 @@ def drop_hot_keys(df: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
     return df.join(F.broadcast(hot), key_cols, "left_anti")
 
 
+def _collapse(df: DataFrame, rep, *carry) -> DataFrame:
+    """Collapse → pair → expand, the combinator behind every collapsed
+    pair path. ``_collapse`` materializes ``members(rep, id, *carry)``
+    once: ``rep`` names each item's group of identical items (the min
+    id per injective key, ``_set_rep``; a SimHash fingerprint is its
+    own rep). The caller pairs the representatives only, and
+    ``_expand`` turns the verified rep pairs back into member pairs.
+
+    Exactness: the pairing must read nothing but the group key — the
+    MinHash signature, every band bucket and (inter, uni) are functions
+    of the word SET; SimHash buckets and the Hamming distance of the
+    fingerprint. Then members of one group share every bucket and pair
+    with the payload of identical items (inter = uni = |set|, Hamming
+    0), and a cross-group pair (a, b) is a candidate and passes the
+    verify iff (rep(a), rep(b)) does, with the same payload. The output
+    is row-identical to pairing every item, while a c-member cluster
+    enters the band join and the verify as ONE row instead of c² join
+    rows per band and c²/2 verifications. For components only
+    connectivity matters: the star edges id → rep are J = 1 edges, and
+    every exact edge (a, b) maps to the path a—rep(a)—rep(b)—b.
+
+    A ``max_bucket_size`` cap breaks the row identity: bucket hotness
+    counts ITEMS, so collapsing would change which buckets are capped
+    (a recall knob, not an exactness one). The pair operators therefore
+    pair per item under a cap; ``near_dup_canonicalize`` caps buckets
+    of representatives.
+    """
+    return df.select(rep.alias("rep"), "id", *carry).localCheckpoint()
+
+
+def _set_rep():
+    """min id per word set. The space-joined sorted set is an
+    injective key — tokens and shingles cannot contain the space
+    splitter (shingles join with \\x1f) — and set equality ignores
+    word order and repeats; sha2 only shortens the shuffle key."""
+    key = F.sha2(F.concat_ws(" ", F.array_sort("words")), 256)
+    return F.min("id").over(Window.partitionBy(key))
+
+
+def _expand(rep_pairs: DataFrame, members: DataFrame, *intra) -> DataFrame:
+    """Verified rep pairs (i, j, payload…) → member pairs, i < j (see
+    ``_collapse``): two equi-joins on ``rep`` expand each pair over both
+    groups — distinct groups, so each member pair appears once — and
+    the intra-group self-join emits the identical-item pairs with the
+    ``intra`` payload columns, computed over ``members``' carry."""
+    payload = [c for c in rep_pairs.columns if c not in ("i", "j")]
+    carry = [c for c in members.columns if c not in ("rep", "id")]
+    a = members.select(F.col("rep").alias("i"), F.col("id").alias("_a"))
+    b = members.select(F.col("rep").alias("j"), F.col("id").alias("_b"))
+    cross = rep_pairs.join(a, "i").join(b, "j").select(
+        F.least("_a", "_b").alias("i"),
+        F.greatest("_a", "_b").alias("j"),
+        *payload,
+    )
+    same = (
+        members.select("rep", F.col("id").alias("i"), *carry)
+        .join(members.select("rep", F.col("id").alias("j")), "rep")
+        .where(F.col("i") < F.col("j"))
+        .select("i", "j", *intra)
+    )
+    return cross.unionByName(same)
+
+
 def near_dup_canonicalize(
     docs: DataFrame,
     threshold: float = 0.9,
@@ -203,21 +271,18 @@ def near_dup_canonicalize(
     collapse to ONE survivor, which is exactly the component
     structure. → (id_col, canonical_id, is_canonical).
 
-    Scale shape — collapse-before-pair: duplicate clusters make the
-    verified-pair list quadratic (a cluster of c docs is a c²/2-edge
-    near-clique; measured 965k pairs over 5k docs at sf0.1), but for
-    canonicalization only CONNECTIVITY matters, so docs with identical
-    word sets (set-Jaccard 1, invariant under word order/repeats) are
-    first collapsed onto a representative via O(n) star edges and the
-    LSH+verify stage runs over representatives only (33x fewer pairs
-    at sf0.1). Components are provably unchanged: star edges are J=1
-    ≥ t edges of the exact-Jaccard graph, and J(rep, x) = J(member, x)
-    because the word sets are equal — every exact edge (a, b) maps to
-    the path a—rep(a)—rep(b)—b. This is the exactness-preserving
-    complement of the ``max_bucket_size`` recall guard.
+    Scale shape — collapse-before-pair (``_collapse``): duplicate
+    clusters make the verified-pair list quadratic (measured 965k
+    pairs over 5k docs at sf0.1), but only connectivity matters here,
+    so docs with identical word sets join their representative by star
+    edges and the MinHash band join + verify run over representatives
+    only (33x fewer pairs at sf0.1). The representatives are distinct
+    by construction, so no duplication gate runs. ``max_bucket_size``
+    caps buckets of representatives.
     """
-    from .components import connected_components
+    from .components import canonical_ids
 
+    _check_bands(n_hashes, rows_per_band)
     # NULL-text docs have no word set: they can pair with nothing
     # (exact Jaccard over NULL is undefined/false), so they are
     # excluded from keying AND pairing and fall out of the final left
@@ -229,40 +294,20 @@ def near_dup_canonicalize(
         .where(F.col("words").isNotNull())
         .localCheckpoint()
     )
-    # injective word-set key: tokens can't contain the space splitter,
-    # so a space-joined sorted set is collision-free (sha2 only
-    # shortens the shuffle key)
-    keyed = ws.select(
-        "id",
-        F.sha2(F.concat_ws(" ", F.array_sort("words")), 256).alias("wkey"),
+    members = _collapse(ws, _set_rep())
+    pairs = _band_and_verify(
+        _rep_sets(ws, members), threshold, n_hashes, rows_per_band,
+        max_bucket_size,
     )
-    reps = keyed.groupBy("wkey").agg(F.min("id").alias("rep"))
-    stars = (
-        keyed.join(reps, "wkey")
-        .where(F.col("id") != F.col("rep"))
+    edges = (
+        members.where(F.col("id") != F.col("rep"))
         .select(F.col("id").alias("src"), F.col("rep").alias("dst"))
-    )
-    ws_reps = ws.join(
-        reps.select(F.col("rep").alias("id")), "id"
-    ).localCheckpoint()
-    pairs = minhash_lsh_pairs(
-        docs, threshold, n_hashes=n_hashes, rows_per_band=rows_per_band,
-        text_col=text_col, id_col=id_col, ngram=ngram,
-        max_bucket_size=max_bucket_size, ws=ws_reps,
-    )
-    edges = stars.unionByName(
-        pairs.select(F.col("i").alias("src"), F.col("j").alias("dst"))
-    )
-    comp = connected_components(edges).withColumnRenamed("node", id_col)
-    canonical = F.coalesce(F.col("component"), F.col(id_col))
-    return (
-        docs.select(id_col)
-        .join(comp, id_col, "left")
-        .select(
-            id_col,
-            canonical.alias("canonical_id"),
-            (canonical == F.col(id_col)).alias("is_canonical"),
+        .unionByName(
+            pairs.select(F.col("i").alias("src"), F.col("j").alias("dst"))
         )
+    )
+    return canonical_ids(
+        docs.select(F.col(id_col).alias("node")), edges, id_col
     )
 
 
@@ -331,6 +376,105 @@ def _hash_injective_on(df: DataFrame, col, hashed) -> bool:
     return row["a"] == row["b"]
 
 
+def _check_bands(n_hashes: int, rows_per_band: int) -> None:
+    if n_hashes % rows_per_band != 0:
+        # silently truncating to n_hashes // rows_per_band bands would
+        # ignore trailing signature rows and deliver a worse P(miss)
+        # than ``minhash_lsh_pairs`` advertises
+        raise ValueError(
+            f"n_hashes ({n_hashes}) must be a multiple of "
+            f"rows_per_band ({rows_per_band})"
+        )
+
+
+def _rep_sets(ws: DataFrame, members: DataFrame) -> DataFrame:
+    """The word sets of the representatives, materialized."""
+    reps = members.where(F.col("id") == F.col("rep")).select("id")
+    return ws.join(reps, "id").localCheckpoint()
+
+
+def _band_and_verify(
+    ws: DataFrame,
+    threshold: float,
+    n_hashes: int,
+    rows_per_band: int,
+    max_bucket_size: int | None,
+    hashed_verify: bool | None = None,
+) -> DataFrame:
+    """MinHash band join + size-prefiltered exact verify over a
+    word-set frame the caller materialized → (i, j, inter, uni)."""
+    sig = minhash_signatures(None, n_hashes, ws=ws)
+    n_bands = n_hashes // rows_per_band
+    sizes = ws.select("id", F.size("words").alias("n"))
+    # one band-row materialization: the bucket self-join consumes
+    # both sides (the signature aggregate would otherwise compute
+    # twice — the plan-audited duplicated subtree); sizes ride
+    # along for the prefilter
+    band_rows = (
+        sig.join(sizes, "id")
+        .select(
+            "id", "n",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).alias("band"),
+                            F.xxhash64(
+                                *[
+                                    F.col(f"mh_{b * rows_per_band + r}")
+                                    for r in range(rows_per_band)
+                                ]
+                            ).alias("bucket"),
+                        )
+                        for b in range(n_bands)
+                    ]
+                )
+            ).alias("bb"),
+        )
+        .select("id", "n", "bb.band", "bb.bucket")
+        .localCheckpoint()
+    )
+    # size prefilter BEFORE the cross-band dedup: the dropped
+    # pairs never shuffle
+    raw = band_candidate_pairs(band_rows, max_bucket_size, carry=("n",),
+                               dedup=False)
+    cand = (
+        raw.where(
+            F.least("n_i", "n_j")
+            >= F.lit(threshold) * F.greatest("n_i", "n_j")
+        )
+        .dropDuplicates(["i", "j"])
+    )
+    # hashed intersect: array_intersect over int64 token hashes is
+    # ~3× cheaper than over the shingle strings (measured 6.6 →
+    # 2.4 s on the 5M sf1 candidates), and EXACT whenever the
+    # hash is collision-free on this corpus's gram domain — the
+    # one-aggregate certificate decides per run; a collision
+    # (≈ g²/2⁶⁵ likelihood) just keeps the string path.
+    if hashed_verify is None:
+        hashed_verify = _hash_injective_on(
+            ws.select(F.explode("words").alias("w")),
+            F.col("w"), F.xxhash64(F.col("w")),
+        )
+    if hashed_verify:
+        vsrc = ws.select(
+            "id",
+            F.transform("words", lambda w: F.xxhash64(w)).alias("words"),
+        )
+    else:
+        vsrc = ws
+    wa = vsrc.select(F.col("id").alias("i"), F.col("words").alias("wi"))
+    wb = vsrc.select(F.col("id").alias("j"), F.col("words").alias("wj"))
+    return (
+        cand.join(wa, "i")
+        .join(wb, "j")
+        .withColumn("inter", F.size(F.array_intersect("wi", "wj")))
+        .withColumn("uni", F.col("n_i") + F.col("n_j") - F.col("inter"))
+        .where(F.col("inter") >= F.lit(threshold) * F.col("uni"))
+        .select("i", "j", "inter", "uni")
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float,
@@ -360,8 +504,7 @@ def minhash_lsh_pairs(
     hot. None = exact banding (oracle-checked configs).
 
     ``ws``: precomputed ``word_sets`` output (must be materialized by
-    the caller) — lets a collapse stage restrict the corpus to
-    duplicate-group representatives without re-tokenizing.
+    the caller) — lets a caller share one tokenization.
 
     Scale shape (r6), both exactness-preserving:
 
@@ -374,179 +517,51 @@ def minhash_lsh_pairs(
       ``t·x`` double product is used in both tests. Measured at sf1:
       15.7M candidates → 5.0M intersections, verify 17.3 → 8.7 s.
     - **Duplicate collapse, gated on measured duplication.** Docs
-      with identical word sets are grouped (injective sorted-set
-      key); the band join + verify run over one representative per
-      group and member pairs are expanded back by group equi-joins.
-      Provably identical output: the signature, every band bucket,
-      and J/inter/uni are all functions of the word SET alone — docs
-      in one group share all buckets with inter = uni = |set|, and a
-      cross-group pair passes iff its representative pair does, with
-      the same (inter, uni). A c-member boilerplate cluster (the
-      100 TB quadratic regime) then contributes ONE rep instead of c²
-      join rows per band + c²/2 verifications. The collapse itself
-      costs a key pass + expansion joins, which is pure overhead when
-      sets are mostly distinct (measured 2× slower on the sf1 shingle
-      corpus, 49.9k distinct sets / 50k docs), so a one-aggregate
-      gate picks the path from the measured duplication ratio — both
-      paths are exact, the gate only chooses cost. With a
-      ``max_bucket_size`` cap the per-doc banding always runs: bucket
-      hotness counts DOCS, so collapsing would change which buckets
-      are capped (a recall knob, not an exactness one).
+      with identical word sets are paired through one representative
+      (``_collapse``/``_expand``, which state why the output is
+      row-identical). The collapse costs a key pass and the expansion
+      joins, pure overhead when sets are mostly distinct (measured 2×
+      slower on the sf1 shingle corpus, 49.9k distinct sets / 50k
+      docs), so a one-aggregate gate picks the path from the measured
+      duplication ratio — both paths are exact, the gate only chooses
+      cost. With a ``max_bucket_size`` cap the per-doc banding always
+      runs.
     """
+    _check_bands(n_hashes, rows_per_band)
     # shingle once, share between the signature and verify paths (the
     # shingle transform + scan would otherwise run 3x)
-    if n_hashes % rows_per_band != 0:
-        # silently truncating to n_hashes // rows_per_band bands would
-        # ignore trailing signature rows and deliver a worse P(miss)
-        # than the formula above advertises
-        raise ValueError(
-            f"n_hashes ({n_hashes}) must be a multiple of "
-            f"rows_per_band ({rows_per_band})"
-        )
     if ws is None:
         ws = word_sets(docs, text_col, id_col, ngram).localCheckpoint()
-
-    def _core(ws_in, cap):
-        """Band join + size-prefiltered exact verify over a word-set
-        frame (the caller materializes it)."""
-        sig = minhash_signatures(docs, n_hashes, text_col, id_col,
-                                 ngram, ws=ws_in)
-        n_bands = n_hashes // rows_per_band
-        sizes = ws_in.select("id", F.size("words").alias("n"))
-        # one band-row materialization: the bucket self-join consumes
-        # both sides (the signature aggregate would otherwise compute
-        # twice — the plan-audited duplicated subtree); sizes ride
-        # along for the prefilter
-        band_rows = (
-            sig.join(sizes, "id")
-            .select(
-                "id", "n",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(b).alias("band"),
-                                F.xxhash64(
-                                    *[
-                                        F.col(f"mh_{b * rows_per_band + r}")
-                                        for r in range(rows_per_band)
-                                    ]
-                                ).alias("bucket"),
-                            )
-                            for b in range(n_bands)
-                        ]
-                    )
-                ).alias("bb"),
-            )
-            .select("id", "n", "bb.band", "bb.bucket")
-            .localCheckpoint()
-        )
-        # size prefilter BEFORE the cross-band dedup: the dropped
-        # pairs never shuffle
-        raw = band_candidate_pairs(band_rows, cap, carry=("n",),
-                                   dedup=False)
-        cand = (
-            raw.where(
-                F.least("n_i", "n_j")
-                >= F.lit(threshold) * F.greatest("n_i", "n_j")
-            )
-            .dropDuplicates(["i", "j"])
-        )
-        # hashed intersect: array_intersect over int64 token hashes is
-        # ~3× cheaper than over the shingle strings (measured 6.6 →
-        # 2.4 s on the 5M sf1 candidates), and EXACT whenever the
-        # hash is collision-free on this corpus's gram domain — the
-        # one-aggregate certificate above decides per run; a
-        # collision (≈ g²/2⁶⁵ likelihood) just keeps the string path.
-        use_hashed = hashed_verify
-        if use_hashed is None:
-            use_hashed = _hash_injective_on(
-                ws_in.select(F.explode("words").alias("w")),
-                F.col("w"), F.xxhash64(F.col("w")),
-            )
-        if use_hashed:
-            vsrc = ws_in.select(
-                "id",
-                F.transform("words", lambda w: F.xxhash64(w)).alias("words"),
-            )
-        else:
-            vsrc = ws_in
-        wa = vsrc.select(F.col("id").alias("i"), F.col("words").alias("wi"))
-        wb = vsrc.select(F.col("id").alias("j"), F.col("words").alias("wj"))
-        return (
-            cand.join(wa, "i")
-            .join(wb, "j")
-            .withColumn("inter", F.size(F.array_intersect("wi", "wj")))
-            .withColumn("uni", F.col("n_i") + F.col("n_j") - F.col("inter"))
-            .where(F.col("inter") >= F.lit(threshold) * F.col("uni"))
-            .select("i", "j", "inter", "uni")
-        )
-
     if max_bucket_size is not None:
-        return _core(ws, max_bucket_size)
+        return _band_and_verify(ws, threshold, n_hashes, rows_per_band,
+                                max_bucket_size, hashed_verify)
 
     # ---- duplication gate (cost-only decision; both paths exact) ----
-    # injective word-set key: tokens/shingles cannot contain the space
-    # splitter (shingles join with \x1f), so the space-joined sorted
-    # set is collision-free; sha2 only shortens the group-join key.
     # NULL word sets never enter the pairing either way (no tokens →
-    # no signature row), so dropping them changes nothing.
-    # the gate only needs a duplication ESTIMATE, so it hashes the
-    # sorted set (xxhash64 over the array — no 1.3 KB string build,
-    # no sha); the collapse itself re-keys with the injective
-    # sorted-set sha below
-    row = ws.where(F.col("words").isNotNull()).agg(
+    # no signature row), so dropping them changes nothing. The gate
+    # only needs a duplication ESTIMATE, so it hashes the sorted set
+    # (xxhash64 over the array — no 1.3 KB string build, no sha); the
+    # collapse keys with the injective sorted-set sha.
+    ws = ws.where(F.col("words").isNotNull())
+    row = ws.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.approx_count_distinct(
             F.xxhash64(F.array_sort("words"))
         ).alias("n_sets"),
     ).first()
     if row["n_docs"] == 0 or row["n_sets"] >= 0.5 * row["n_docs"]:
-        return _core(ws, None)
+        return _band_and_verify(ws, threshold, n_hashes, rows_per_band,
+                                None, hashed_verify)
 
-    # ---- collapsed path (see docstring) ----
-    keyed = ws.where(F.col("words").isNotNull()).select(
-        "id",
-        F.sha2(F.concat_ws(" ", F.array_sort("words")), 256).alias("_wkey"),
-        F.size("words").alias("_n"),
-    ).localCheckpoint()
-    reps = keyed.groupBy("_wkey").agg(F.min("id").alias("id"))
-    ws_reps = ws.join(reps.select("id"), "id").localCheckpoint()
-    rep_pairs = _core(ws_reps, None)
-    # rep id → group key, then expand each verified rep pair over both
-    # member groups; the two groups are distinct, so every (a, b)
-    # member pair appears exactly once (ordered by least/greatest)
-    rk = keyed.select(F.col("id").alias("_rid"), F.col("_wkey"))
-    ma = keyed.select(F.col("_wkey").alias("_ka"), F.col("id").alias("_a"))
-    mb = keyed.select(F.col("_wkey").alias("_kb"), F.col("id").alias("_b"))
-    cross = (
-        rep_pairs
-        .join(rk.withColumnRenamed("_rid", "i")
-              .withColumnRenamed("_wkey", "_ka"), "i")
-        .join(rk.withColumnRenamed("_rid", "j")
-              .withColumnRenamed("_wkey", "_kb"), "j")
-        .join(ma, "_ka")
-        .join(mb, "_kb")
-        .select(
-            F.least("_a", "_b").alias("i"),
-            F.greatest("_a", "_b").alias("j"),
-            "inter", "uni",
-        )
-    )
-    # intra-group pairs: identical sets share every band bucket and
-    # have inter = uni = |set|; the threshold test is kept verbatim
-    # for degenerate thresholds > 1
-    intra = (
-        keyed.select(F.col("_wkey"), F.col("id").alias("i"),
-                     F.col("_n").alias("inter"))
-        .join(keyed.select(F.col("_wkey"), F.col("id").alias("j")),
-              "_wkey")
-        .where(F.col("i") < F.col("j"))
-        .withColumn("uni", F.col("inter"))
-        .where(F.col("inter") >= F.lit(threshold) * F.col("uni"))
-        .select("i", "j", "inter", "uni")
-    )
-    return cross.unionByName(intra)
+    members = _collapse(ws, _set_rep(), F.size("words").alias("n"))
+    rep_pairs = _band_and_verify(_rep_sets(ws, members), threshold,
+                                 n_hashes, rows_per_band, None,
+                                 hashed_verify)
+    # identical sets have inter = uni = |set| ≥ 1, which passes the
+    # threshold test iff threshold ≤ 1; above 1 (or NaN) no pair passes
+    return _expand(
+        rep_pairs, members, F.col("n").alias("inter"), F.col("n").alias("uni")
+    ).where(F.lit(bool(threshold <= 1)))
 
 
 def simhash_pairs(
@@ -575,20 +590,13 @@ def simhash_pairs(
     → (i, j, hamming), i < j.
 
     Scale shape (r6): when ``max_bucket_size`` is None the banding
-    runs COLLAPSED over DISTINCT fingerprints — the fingerprint IS an
-    exact group key (bucket membership and the hamming distance are
-    both functions of the two fingerprints alone), so the band
-    self-join and the hamming verify run over one row per distinct
-    fingerprint, and member pairs are expanded back by fingerprint
-    equi-joins: equal-fingerprint docs always share every block
-    (hamming 0), a cross-fingerprint pair shares a block / passes the
-    verify exactly iff its fingerprint pair does. Identical-document
-    clusters (the quadratic mass — sum c² ≈ 7.4M per band at sf1)
-    stop multiplying through the join and the cross-band dedup; the
-    c²/2 output rows come from one plain equi-join at the end.
-    With a ``max_bucket_size`` cap the legacy per-doc banding runs:
-    hotness counts docs, so collapsing would change which buckets are
-    capped.
+    runs over DISTINCT fingerprints, each its own representative
+    (``_collapse``/``_expand``, which state why the output is
+    row-identical). Identical-document clusters (the quadratic mass —
+    sum c² ≈ 7.4M per band at sf1) stop multiplying through the band
+    join and the cross-band dedup; the c²/2 output rows come from one
+    plain equi-join at the end. With a ``max_bucket_size`` cap the
+    per-doc banding runs.
     """
     if 64 % n_bands != 0 or not 0 <= max_hamming < n_bands:
         # a bare assert would be stripped under python -O, silently
@@ -620,58 +628,34 @@ def simhash_pairs(
             ).alias("bb"),
         ).select(*extra, "bb.band", "bb.bucket")
 
+    def _verify(pairs, a: str, b: str):
+        d = F.bit_count(F.col(a).bitwiseXOR(F.col(b))).cast("int")
+        return pairs.withColumn("hamming", d).where(
+            F.col("hamming") <= max_hamming
+        ).select("i", "j", "hamming")
+
     if max_bucket_size is not None:
         band_rows = _blocks(sig, ("id", "simhash"))
-        return (
+        return _verify(
             band_candidate_pairs(band_rows, max_bucket_size,
-                                 carry=("simhash",))
-            .withColumn(
-                "hamming",
-                F.bit_count(
-                    F.col("simhash_i").bitwiseXOR(F.col("simhash_j"))
-                ).cast("int"),
-            )
-            .where(F.col("hamming") <= max_hamming)
-            .select("i", "j", "hamming")
+                                 carry=("simhash",)),
+            "simhash_i", "simhash_j",
         )
 
-    # ---- collapsed path (exact; see docstring) ----
     # one UDF pass: the fingerprint frame feeds the distinct-fp
-    # banding, both expansion joins, and the intra self-join
-    sigc = sig.localCheckpoint()
-    fps = sigc.select("simhash").distinct()
-    # the fingerprint doubles as the pair id: band_candidate_pairs'
-    # (i, j) ARE the two fingerprints, so the hamming verify needs no
-    # carry columns at all
-    fp_pairs = (
+    # banding, both expansion joins, and the intra self-join. The
+    # fingerprint doubles as the pair id: band_candidate_pairs' (i, j)
+    # ARE the two fingerprints, so the verify needs no carry columns
+    members = _collapse(sig, F.col("simhash"))
+    fps = members.select(F.col("rep").alias("simhash")).distinct()
+    fp_pairs = _verify(
         band_candidate_pairs(
             _blocks(fps.withColumn("id", F.col("simhash")), ("id",)),
             None,
-        )
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("i").bitwiseXOR(F.col("j"))).cast("int"),
-        )
-        .where(F.col("hamming") <= max_hamming)
+        ),
+        "i", "j",
     )
-    ma = sigc.select(F.col("simhash").alias("i"), F.col("id").alias("_a"))
-    mb = sigc.select(F.col("simhash").alias("j"), F.col("id").alias("_b"))
-    cross = (
-        fp_pairs.join(ma, "i")
-        .join(mb, "j")
-        .select(
-            F.least("_a", "_b").alias("i"),
-            F.greatest("_a", "_b").alias("j"),
-            "hamming",
-        )
-    )
-    intra = (
-        sigc.select("simhash", F.col("id").alias("i"))
-        .join(sigc.select("simhash", F.col("id").alias("j")), "simhash")
-        .where(F.col("i") < F.col("j"))
-        .select("i", "j", F.lit(0).cast("int").alias("hamming"))
-    )
-    return cross.unionByName(intra)
+    return _expand(fp_pairs, members, F.lit(0).cast("int").alias("hamming"))
 
 
 def simhash64(

@@ -30,6 +30,14 @@ def _dot(a, b):
     )
 
 
+def _norm(v):
+    return F.sqrt(_dot(v, v))
+
+
+def _cos(a, b, na, nb):
+    return _dot(a, b) / F.nullif(na * nb, F.lit(0.0))
+
+
 def cosine_expr(a, b):
     """Sequential-fold cosine: dot/(sqrt(dot_aa)*sqrt(dot_bb)) over
     double-cast arrays — deterministic, SQL-oracle-matchable.
@@ -42,8 +50,76 @@ def cosine_expr(a, b):
     the whole job). Non-zero denominators are untouched, so the
     bit-for-bit oracle parity holds wherever cosine is defined."""
     ad, bd = _as_double(a), _as_double(b)
-    denom = F.sqrt(_dot(ad, ad)) * F.sqrt(_dot(bd, bd))
-    return _dot(ad, bd) / F.nullif(denom, F.lit(0.0))
+    return _cos(ad, bd, _norm(ad), _norm(bd))
+
+
+def _normed(df: DataFrame, id_col: str, vec_col: str, side: str) -> DataFrame:
+    """→ (side, v_<side>, n_<side>): ids, double vectors and their
+    norms, computed once per row below a join rather than per pair.
+    Self-norms inline in ``cosine_expr`` would re-fold sqrt(dot(v, v))
+    for both vectors on every pair row — 3 array folds where only the
+    cross dot varies (r5 measured kNN 2.7 → 1.1 s at sf0.1 from this).
+    The norms are the same IEEE doubles and ``_normed_cos`` keeps the
+    exact ``dot / nullif(na·nb, 0)`` shape, so results stay bit-equal
+    to ``cosine_expr`` and the SQL oracle (NULL for zero-norm vectors,
+    never DIVIDE_BY_ZERO)."""
+    v = f"v_{side}"
+    return df.select(
+        F.col(id_col).alias(side), _as_double(F.col(vec_col)).alias(v)
+    ).withColumn(f"n_{side}", _norm(F.col(v)))
+
+
+def _normed_cos(a: str, b: str):
+    return _cos(F.col(f"v_{a}"), F.col(f"v_{b}"),
+                F.col(f"n_{a}"), F.col(f"n_{b}"))
+
+
+def _verify_pairs(cand: DataFrame, emb: DataFrame, threshold: float,
+                  id_col: str, vec_col: str) -> DataFrame:
+    """Exact re-verify of GEMM candidates (i, j): one cross-dot fold
+    per candidate over per-side norms (``_normed``), in the operand
+    order of ``cosine_expr`` / the SQL oracle, so GEMM's different FP
+    rounding can never flip a boundary pair."""
+    return (
+        cand.join(_normed(emb, id_col, vec_col, "i"), "i")
+        .join(_normed(emb, id_col, vec_col, "j"), "j")
+        .where(_normed_cos("i", "j") >= threshold)
+        .select("i", "j")
+    )
+
+
+def _unit_rows(M):
+    """Row-normalized float64 matrix. Zero and NaN rows become NaN
+    rows, which fail every ``>=`` cut (and argmax after nan_to_num)."""
+    import numpy as np
+
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return M / np.linalg.norm(M, axis=1, keepdims=True)
+
+
+def _gemm_pairs(ids_l, L, cut: float, ids_r=None, R=None):
+    """The dense candidate kernel: one float64 GEMM of the row-normalized
+    ``L`` against ``R`` (against ``L`` itself when ``R`` is None), cut at
+    ``cut`` = threshold − margin → (i, j) id arrays, i < j, each pair
+    once. The margin absorbs GEMM's FP reassociation (≲ 1e-13 for
+    64-dim f64 against 1e-6), so no pair the exact re-verify
+    (``_verify_pairs``) accepts is dropped; zero-norm or NaN vectors
+    yield NaN sims and fail the cut, as their NULL cosine fails the
+    fold. ``R`` must hold ids disjoint from ``L``'s."""
+    import numpy as np
+
+    Ln = _unit_rows(L)
+    if R is None:
+        ids_r, Rn = ids_l, Ln
+    else:
+        Rn = _unit_rows(R)
+    with np.errstate(invalid="ignore"):
+        r, c = np.nonzero(Ln @ Rn.T >= cut)
+    ii, jj = ids_l[r], ids_r[c]
+    if R is None:  # a square block holds both orders of every pair
+        keep = ii < jj
+        return ii[keep], jj[keep]
+    return np.minimum(ii, jj), np.maximum(ii, jj)
 
 
 def valid_vectors(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -93,33 +169,14 @@ def knn_bruteforce(
     for the given query ids. The query side is tiny → broadcast
     nested-loop join; rank ties broken by neighbor id. Top-k is the
     shared two-phase reduction (``_two_phase_topk``), never a
-    single-task window sort.
-
-    Self-norms are precomputed per SIDE below the join (a Project on
-    each input), not per pair: ``cosine_expr`` inline would re-fold
-    ``sqrt(dot(v,v))`` for both vectors on every (candidate, query)
-    row — 3 array folds per pair where only the cross dot actually
-    varies. Per-pair work drops to ONE fold (~3× fewer flops; r5
-    measured 2.7 → 1.1 s at sf0.1). Bit-parity with the oracle is
-    unchanged: the norms are the same IEEE doubles, just computed
-    once, and the quotient keeps the exact ``dot / nullif(na*nb, 0)``
-    shape (NULL for zero-norm vectors, never DIVIDE_BY_ZERO)."""
-    def _with_norm(df, id_alias, v_alias, n_alias):
-        return df.select(
-            F.col(id_col).alias(id_alias),
-            _as_double(F.col(vec_col)).alias(v_alias),
-        ).withColumn(n_alias, F.sqrt(_dot(F.col(v_alias), F.col(v_alias))))
-
-    q = _with_norm(emb.where(F.col(id_col).isin(query_ids)),
-                   "query_id", "qv", "qn")
-    c = _with_norm(emb, "neighbor_id", "cv", "cn")
+    single-task window sort. Self-norms are precomputed per side
+    (``_normed``): one cross-dot fold per (candidate, query) row."""
+    q = _normed(emb.where(F.col(id_col).isin(query_ids)), id_col, vec_col,
+                "query_id")
+    c = _normed(emb, id_col, vec_col, "neighbor_id")
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos",
-            _dot(F.col("qv"), F.col("cv"))
-            / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0)),
-        )
+        .withColumn("cos", _normed_cos("query_id", "neighbor_id"))
     )
     return _two_phase_topk(scored, "neighbor_id", k)
 
@@ -179,13 +236,12 @@ def cosine_pairs_blocked(
        B)``; it is replicated to every block *pair* it participates in
        (≤ B+1 copies — the classic block nested-loop replication,
        total shuffle O(n·B) with B ≈ √(n/rows_per_task)).
-    2. ``applyInPandas`` per block pair runs one float64 BLAS GEMM over
-       the pair's two sub-matrices and emits candidate pairs at
+    2. ``applyInPandas`` per block pair runs the GEMM candidate kernel
+       (``_gemm_pairs``) over the pair's two sub-matrices at
        ``threshold - margin``.
-    3. Candidates (tiny vs n²) are re-verified JVM-side with the exact
-       sequential-fold ``cosine_expr`` at ``threshold`` — the SAME
-       operation order as the ANSI-SQL oracle, so GEMM's different FP
-       rounding can never flip a boundary pair (ADVICE round-1 note).
+    3. Candidates (tiny vs n²) are re-verified JVM-side at
+       ``threshold`` (``_verify_pairs``) — the SAME operation order as
+       the ANSI-SQL oracle (ADVICE round-1 note).
 
     Output ≡ ``cosine_pairs``.
     """
@@ -225,35 +281,20 @@ def cosine_pairs_blocked(
         import numpy as np
 
         bi, bj = key
-        empty = pd.DataFrame(
-            {"i": pd.Series(dtype="int64"), "j": pd.Series(dtype="int64")}
-        )
-        lm = pdf[pdf["is_l"].to_numpy()]
-        if not len(lm):  # one-sided group (a hash block can be empty)
-            return empty
-        ids_l = lm["vid"].to_numpy()
-        L = np.array(list(lm["vec"]), dtype=np.float64)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            Ln = L / np.linalg.norm(L, axis=1, keepdims=True)
-            if bi == bj:
-                sims = Ln @ Ln.T
-                ids_r = ids_l
-            else:
-                rm = pdf[~pdf["is_l"].to_numpy()]
-                if not len(rm):
-                    return empty
-                ids_r = rm["vid"].to_numpy()
-                R = np.array(list(rm["vec"]), dtype=np.float64)
-                Rn = R / np.linalg.norm(R, axis=1, keepdims=True)
-                sims = Ln @ Rn.T
-        mask = (sims >= cut) & (ids_l[:, None] != ids_r[None, :])
-        r, c = np.nonzero(mask)
-        ii, jj = ids_l[r], ids_r[c]
-        lo = np.minimum(ii, jj)
-        hi = np.maximum(ii, jj)
-        keep = lo < hi
-        out = pd.DataFrame({"i": lo[keep], "j": hi[keep]})
-        return out.drop_duplicates()  # diagonal emits both (i,j),(j,i)
+        is_l = pdf["is_l"].to_numpy()
+        lm, rm = pdf[is_l], pdf[~is_l]
+        if not len(lm) or (bi != bj and not len(rm)):
+            # one-sided group (a hash block can be empty)
+            return pd.DataFrame(
+                {"i": pd.Series(dtype="int64"), "j": pd.Series(dtype="int64")}
+            )
+        args = [lm["vid"].to_numpy(),
+                np.array(list(lm["vec"]), dtype=np.float64), cut]
+        if bi != bj:
+            args += [rm["vid"].to_numpy(),
+                     np.array(list(rm["vec"]), dtype=np.float64)]
+        i, j = _gemm_pairs(*args)
+        return pd.DataFrame({"i": i, "j": j})
 
     cand = (
         lside.unionByName(rside)
@@ -261,15 +302,7 @@ def cosine_pairs_blocked(
         .applyInPandas(gemm, "i long, j long")
     )
 
-    # exact fold-order re-verification (operand order == oracle)
-    va = emb.select(F.col(id_col).alias("i"), F.col(vec_col).alias("va"))
-    vb = emb.select(F.col(id_col).alias("j"), F.col(vec_col).alias("vb"))
-    return (
-        cand.join(va, "i")
-        .join(vb, "j")
-        .where(cosine_expr(F.col("va"), F.col("vb")) >= threshold)
-        .select("i", "j")
-    )
+    return _verify_pairs(cand, emb, threshold, id_col, vec_col)
 
 
 def srp_hyperplanes(n_bits: int, dim: int, seed: int = 7):
@@ -320,10 +353,9 @@ def srp_lsh_pairs(
        any (band, key) bucket become candidate pairs via a bucket
        equi-join (never all-pairs). ``max_bucket_size`` is the standard
        hot-bucket guard for the 10^6-copy boilerplate-cluster regime;
-    3. verify: candidates re-checked JVM-side with the exact
-       sequential-fold ``cosine_expr`` at ``threshold`` — the same
-       operand order as the brute-force baseline and the SQL oracle, so
-       output rows are exact.
+    3. verify: candidates re-checked JVM-side at ``threshold``
+       (``_verify_pairs``) — the same operand order as the brute-force
+       baseline and the SQL oracle, so output rows are exact.
 
     Output = { (i<j) : cosine ≥ threshold AND the pair shares ≥1 band
     bucket }. Recall vs the full cosine set for a pair at cosine c is
@@ -407,19 +439,15 @@ def srp_lsh_pairs(
         band_rows = drop_hot_keys(band_rows, ["band", "bucket"],
                                   max_bucket_size)
 
-    # Candidates via ONE float64 GEMM per (band, bucket) group with a
-    # tiny margin, then the exact sequential-fold re-verify at
-    # ``threshold`` — the ``cosine_pairs_blocked`` pattern. This
-    # replaces the r5 shape (bucket self-join + per-pair JVM cosine
-    # folds + a 14.7M-row cross-band dedup Exchange, ~48 s at sf1):
-    # the ~n²/bucket_width candidate dot products run in BLAS
-    # (measured 1.5–2.7 s for the same 35,759 sf1 survivors), and
-    # only survivors ever shuffle. Exactness: the margin absorbs
-    # GEMM's FP reassociation (≲ 1e-13 for 64-dim f64, margin 1e-6),
-    # so no pair the exact fold accepts is dropped; NaN / zero-norm
-    # vectors yield NaN sims, fail the cut, and were equally excluded
-    # by the fold path's NULL cosine. The bucket grouping itself IS
-    # the candidate contract (pairs sharing ≥ 1 band bucket).
+    # Candidates via ONE GEMM per (band, bucket) group (``_gemm_pairs``,
+    # margin 1e-6), then the exact re-verify at ``threshold`` — the
+    # ``cosine_pairs_blocked`` pattern. This replaces the r5 shape
+    # (bucket self-join + per-pair JVM cosine folds + a 14.7M-row
+    # cross-band dedup Exchange, ~48 s at sf1): the ~n²/bucket_width
+    # candidate dot products run in BLAS (measured 1.5–2.7 s for the
+    # same 35,759 sf1 survivors), and only survivors ever shuffle. The
+    # bucket grouping itself IS the candidate contract (pairs sharing
+    # ≥ 1 band bucket).
     cut = threshold - 1e-6
 
     def partition_gemms(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -432,28 +460,21 @@ def srp_lsh_pairs(
         # safe.
         bl = list(batches)
         pdf = pd.concat(bl, ignore_index=True) if bl else None
-        out_i: list = []
-        out_j: list = []
+        out_i = [np.empty(0, dtype=np.int64)]
+        out_j = [np.empty(0, dtype=np.int64)]
         if pdf is not None and len(pdf):
             for _, g in pdf.groupby(["band", "bucket"], sort=False):
                 if len(g) < 2:
                     continue
-                ids = g["id"].to_numpy()
-                V = np.array(list(g["vec"]), dtype=np.float64)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-                    sims = Vn @ Vn.T
-                r, c = np.nonzero(sims >= cut)
-                keep = ids[r] < ids[c]
-                out_i.append(ids[r][keep])
-                out_j.append(ids[c][keep])
-        if out_i:
-            yield pd.DataFrame({
-                "i": np.concatenate(out_i), "j": np.concatenate(out_j)
-            })
-        else:
-            yield pd.DataFrame({"i": pd.Series(dtype="int64"),
-                                "j": pd.Series(dtype="int64")})
+                i, j = _gemm_pairs(
+                    g["id"].to_numpy(),
+                    np.array(list(g["vec"]), dtype=np.float64), cut,
+                )
+                out_i.append(i)
+                out_j.append(j)
+        yield pd.DataFrame(
+            {"i": np.concatenate(out_i), "j": np.concatenate(out_j)}
+        )
 
     cand = (
         band_rows
@@ -463,25 +484,7 @@ def srp_lsh_pairs(
         .dropDuplicates(["i", "j"])
     )
 
-    # exact re-verify with per-side precomputed norms (one cross-dot
-    # fold per survivor): the same IEEE doubles and operand order as
-    # ``cosine_expr`` / the SQL oracle — dot / nullif(na·nb, 0)
-    def _side(ia, va_, na_):
-        return emb.select(
-            F.col(id_col).alias(ia),
-            _as_double(F.col(vec_col)).alias(va_),
-        ).withColumn(na_, F.sqrt(_dot(F.col(va_), F.col(va_))))
-
-    return (
-        cand.join(_side("i", "va", "na"), "i")
-        .join(_side("j", "vb", "nb"), "j")
-        .where(
-            _dot(F.col("va"), F.col("vb"))
-            / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))
-            >= threshold
-        )
-        .select("i", "j")
-    )
+    return _verify_pairs(cand, emb, threshold, id_col, vec_col)
 
 
 def srp_neardup_canonicalize(
@@ -504,25 +507,15 @@ def srp_neardup_canonicalize(
     near-dup chains (cos(a,b) ≥ τ, cos(b,c) ≥ τ, cos(a,c) < τ) must
     still collapse to ONE survivor, which is exactly the component
     structure. → (id_col, canonical_id, is_canonical)."""
-    from .components import connected_components
+    from .components import canonical_ids
 
     pairs = srp_lsh_pairs(
         emb, spark, threshold, n_bits=n_bits, n_bands=n_bands,
         id_col=id_col, vec_col=vec_col, max_bucket_size=max_bucket_size,
         seed=seed,
     )
-    comp = connected_components(pairs, src="i", dst="j")
-    ids = emb.select(F.col(id_col).alias("node"))
-    return (
-        ids.join(comp, "node", "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.coalesce("component", "node").alias("canonical_id"),
-            (F.coalesce("component", "node") == F.col("node")).alias(
-                "is_canonical"
-            ),
-        )
-    )
+    return canonical_ids(emb.select(F.col(id_col).alias("node")),
+                         pairs.toDF("src", "dst"), id_col)
 
 
 def train_ivf_centroids(
@@ -548,10 +541,6 @@ def train_ivf_centroids(
     """
     import numpy as np
 
-    def _norm(M):
-        with np.errstate(invalid="ignore", divide="ignore"):
-            return M / np.linalg.norm(M, axis=1, keepdims=True)
-
     emb = valid_vectors(emb, vec_col)
     init_rows = (
         emb.select(id_col, vec_col)
@@ -559,7 +548,7 @@ def train_ivf_centroids(
         .limit(n_centroids)
         .collect()
     )
-    C = _norm(np.array([list(r[1]) for r in init_rows], dtype=np.float64))
+    C = _unit_rows(np.array([list(r[1]) for r in init_rows], dtype=np.float64))
     sc = spark.sparkContext
 
     for _ in range(kmeans_iters):
@@ -573,7 +562,7 @@ def train_ivf_centroids(
                 if not len(pdf):
                     continue
                 V = np.array(list(pdf[vec_col]), dtype=np.float64)
-                Vn = _norm(V)
+                Vn = _unit_rows(V)
                 a = np.nan_to_num(Vn @ Cl.T).argmax(axis=1)
                 np.add.at(acc_n, a, 1)
                 np.add.at(acc_s, a, np.nan_to_num(Vn))
@@ -604,7 +593,7 @@ def train_ivf_centroids(
         moved = cnt > 0
         C = C.copy()
         C[moved] = sm[moved] / cnt[moved, None]
-        C = _norm(C)
+        C = _unit_rows(C)
     return C
 
 
@@ -651,9 +640,7 @@ def ivf_knn(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+            Vn = _unit_rows(np.array(list(pdf[vec_col]), dtype=np.float64))
             out = pdf[[id_col, vec_col]].copy()
             out["centroid"] = np.nan_to_num(Vn @ Cl.T).argmax(axis=1)
             yield out
@@ -662,9 +649,9 @@ def ivf_knn(
         assign, f"{id_col} long, {vec_col} array<double>, centroid int"
     )
 
-    Q = np.array([list(r[vec_col]) for r in q_rows], dtype=np.float64)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    Qn = _unit_rows(
+        np.array([list(r[vec_col]) for r in q_rows], dtype=np.float64)
+    )
     probes = np.argsort(-np.nan_to_num(Qn @ Cn.T), axis=1)[:, :n_probe]
     probe_pdf = pd.DataFrame(
         [

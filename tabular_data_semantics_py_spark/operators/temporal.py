@@ -501,8 +501,7 @@ def range_agg(left: DataFrame, right: DataFrame, on: str, ord_col: str,
 
 def sessionize(events: DataFrame, on: str, ord_col: str, gap: int,
                value_col: str = "value",
-               hot_threshold: int | None = None,
-               barrier: bool = True) -> DataFrame:
+               hot_threshold: int | None = None) -> DataFrame:
     """→ one row per session: ``(on, session_start, session_end,
     n_events, total_dec)`` — gap-based sessionization (a new session
     starts when the ordinal advances by MORE than ``gap``; ties and
@@ -598,25 +597,12 @@ def sessionize(events: DataFrame, on: str, ord_col: str, gap: int,
     # the interior/boundary split consumes this frame twice (two
     # union branches); without a barrier the whole scan + bucket join
     # + local-session window would COMPUTE twice (plan-audited:
-    # docs/explain_temporal_hot.txt shows the duplicated subtree in
-    # the barrier=False plan). A lazy localCheckpoint materializes
-    # the session frame once on first action and both branches read
-    # it — the space-for-compute trade is bounded by the session
-    # count (≤ events, usually ≪), and MEMORY_AND_DISK spills rather
-    # than OOMs at scale. ``barrier=False`` keeps the fully lazy
-    # (double-computing) plan — used by the plan-capture script,
-    # whose explain would otherwise truncate at the checkpoint scan.
-    # FAULT-TOLERANCE caveat (ADVICE r05): localCheckpoint truncates
-    # lineage into executor-local blocks — on a real cluster an
-    # executor loss makes them unrecoverable and fails the job. For
-    # cluster runs where that matters, prefer
-    # ``sessionize(..., barrier=False)`` wrapped in
-    # ``df.persist(StorageLevel.MEMORY_AND_DISK)`` by the caller
-    # (recomputable lineage, still deduplicates the two consumers) —
-    # kept out of this operator because persist() requires the caller
-    # to own unpersist timing.
-    if barrier:
-        sess = sess.localCheckpoint(eager=False)
+    # docs/explain_temporal_hot.txt shows the duplicated subtree). A
+    # lazy localCheckpoint materializes the session frame once on
+    # first action and both branches read it — the space-for-compute
+    # trade is bounded by the session count (≤ events, usually ≪), and
+    # MEMORY_AND_DISK spills rather than OOMs at scale.
+    sess = sess.localCheckpoint(eager=False)
     interior = sess.where(
         (F.col("_sid") != F.col("_mnsid"))
         & (F.col("_sid") != F.col("_mxsid"))

@@ -74,12 +74,29 @@ def _ensure_worker_import_path() -> None:
         )
 
 
+def default_driver_mem() -> str:
+    """Driver heap sized from the host: a fifth of the lower of the
+    cgroup memory limit and MemTotal, at least 1 GB. Leaves room for a
+    second JVM (tests and spark-submit children start one next to the
+    session's) and the Python workers. ``SPARK_DRIVER_MEM`` overrides."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                mem = min(mem, int(f.read().strip()))
+        except (OSError, ValueError):
+            continue
+    return f"{max(1, mem // 5 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "tabular-data-semantics-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     _ensure_worker_import_path()
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
@@ -155,7 +172,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_mem)
         # Xms=Xmx + AlwaysPreTouch: fault the whole heap in at session
         # startup, BEFORE any timed work. This host intermittently
         # serves first-touch page faults ~1000x slow (host-side memory
@@ -168,10 +185,7 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             ""
             if os.environ.get("SPARK_GRAFT_NO_PRETOUCH") == "1"
-            else (
-                f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '8g')} "
-                "-XX:+AlwaysPreTouch"
-            ),
+            else f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
         )
         # shuffle/spill dir: tmpfs when available (see scratch_root).
         # Spark deletes its blockmgr/spill dirs under this root on

@@ -15,6 +15,28 @@ def _docs(spark):
     return spark.read.parquet(SF001)
 
 
+def _dup_docs(spark):
+    """A duplicate-heavy corpus: 21 distinct word sets over 73 docs, so
+    the MinHash duplication gate picks the collapsed path. One hot
+    cluster of 40 identical sets (word order varies; repeats change
+    the SimHash fingerprint but not the set), 5 near-copies of it one
+    word apart (J = 9/11), 5 texts three times each, 10 singletons, two
+    empty texts and a NULL text."""
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    texts = []
+    for k in range(40):
+        words = base[k % 10:] + base[:k % 10]
+        texts.append(" ".join(words + words[:1] * (k % 3)))
+    texts += [" ".join(base[:k] + [f"near{k}"] + base[k + 1:])
+              for k in range(5)]
+    texts += [f"red green blue w{k} x{k} y{k}" for k in range(5)] * 3
+    texts += [f"solo{k} a{k} b{k} c{k}" for k in range(10)]
+    texts += ["", "", None]
+    return spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+
+
 def test_hot_bucket_cap_is_subset(spark):
     """Capped banding may only LOSE candidate pairs (recall trade-off),
     never invent them; verified output stays a subset."""
@@ -255,19 +277,71 @@ def test_hash_injective_certificate(spark):
 def test_hashed_verify_output_identical(spark):
     """minhash_lsh_pairs output must be row-identical whether the
     exact-Jaccard verify runs on shingle strings or on their hashed
-    int64 images (the certificate holds on this corpus, so both are
-    exact)."""
-    docs = _docs(spark)
+    int64 images (the certificate holds on these corpora, so both are
+    exact), on the per-doc and on the collapsed path."""
+    for docs in (_docs(spark), _dup_docs(spark)):
+        def rows(hv):
+            return sorted(
+                (r.i, r.j, r.inter, r.uni)
+                for r in minhash_lsh_pairs(
+                    docs, 0.8, 16, 1, ngram=3, hashed_verify=hv
+                ).collect()
+            )
 
-    def rows(hv):
-        return sorted(
-            (r.i, r.j, r.inter, r.uni)
-            for r in minhash_lsh_pairs(
-                docs, 0.8, 16, 1, ngram=3, hashed_verify=hv
-            ).collect()
-        )
+        s = rows(False)
+        assert s == rows(True)
+        assert s == rows(None)  # default = certificate-gated
+        assert len(s) > 0
 
-    s = rows(False)
-    assert s == rows(True)
-    assert s == rows(None)  # default = certificate-gated
-    assert len(s) > 0
+
+def test_collapsed_paths_match_per_item_references(spark, monkeypatch):
+    """The collapse → pair → expand paths are row-identical to pairing
+    every doc: MinHash to exact ``jaccard_pairs``, collapsed SimHash to
+    the per-doc banding (a cap of n_docs never trips), and the
+    canonicalization to a union-find over ``jaccard_pairs``."""
+    from tabular_data_semantics_py_spark.operators import dedup
+
+    expanded = []
+    expand = dedup._expand
+    monkeypatch.setattr(
+        dedup, "_expand", lambda *a: expanded.append(1) or expand(*a)
+    )
+    docs = _dup_docs(spark)
+    n_docs = docs.count()
+
+    exact = sorted(
+        (r.i, r.j, r.inter, r.uni)
+        for r in dedup.jaccard_pairs(docs, 0.8).collect()
+    )
+    got = sorted(
+        (r.i, r.j, r.inter, r.uni)
+        for r in minhash_lsh_pairs(docs, 0.8).collect()
+    )
+    assert expanded, "the duplication gate must pick the collapsed path"
+    assert got == exact
+    assert len(exact) > 40 * 39 // 2
+
+    collapsed = sorted(dedup.simhash_pairs(docs).collect())
+    per_doc = sorted(
+        dedup.simhash_pairs(docs, max_bucket_size=n_docs).collect()
+    )
+    assert len(expanded) == 2
+    assert collapsed == per_doc
+    assert len(collapsed) > 0
+
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for i, j, _, _ in exact:
+        a, b = find(i), find(j)
+        parent[max(a, b)] = min(a, b)
+    want = {i: find(i) for i in range(n_docs)}
+    got = {
+        r.doc_id: r.canonical_id
+        for r in dedup.near_dup_canonicalize(docs, 0.8).collect()
+    }
+    assert got == want
