@@ -46,13 +46,6 @@ _SEQ = itertools.count()
 # scratch dirs with a registered atexit cleanup, keyed by applicationId
 _ATEXIT_REGISTERED: set[str] = set()
 
-# per-process log of (barrier name, wall seconds) for every eager
-# barrier write — each one is a full driver action, so this is the
-# scaling profiler's view of where serial time goes (scripts/
-# profile_scaling.py). Appending is O(1); callers clear as needed.
-BARRIER_TIMES: list[tuple[str, float]] = []
-
-
 def _scratch_dir(spark: SparkSession) -> str:
     # same tmpfs-preferring root as spark.local.dir (session.py
     # scratch_root): barrier parquet is stage I/O, and on this
@@ -94,15 +87,11 @@ def parquet_barrier(df: DataFrame, name: str) -> DataFrame:
     reclaims them between standalone reps, and an ``atexit`` hook
     (registered on first write) reclaims them at process exit.
     """
-    import time
-
     spark = df.sparkSession
     scratch = _scratch_dir(spark)
     _register_cleanup(scratch)
     path = os.path.join(scratch, f"{name}-g{next(_SEQ)}")
-    t0 = time.time()
     df.write.parquet(path)
-    BARRIER_TIMES.append((name, time.time() - t0))
     return spark.read.parquet(path)
 
 

@@ -2111,9 +2111,7 @@ def emb_cosine_pairs_fast(spark, sf_dir):
     interpreted expression evaluation."""
     from .operators.similarity import cosine_pairs_blocked
 
-    return cosine_pairs_blocked(
-        _load(spark, sf_dir, "embeddings", rebalance=True), 0.4
-    )
+    return cosine_pairs_blocked(_load(spark, sf_dir, "embeddings"), 0.4)
 
 
 def _o_curation():
@@ -2527,7 +2525,7 @@ def doc_simhash(spark, sf_dir):
     no_oracle row."""
     from .operators.dedup import simhash64
 
-    return simhash64(_load(spark, sf_dir, "documents", rebalance=True))
+    return simhash64(_load(spark, sf_dir, "documents"))
 
 
 @q("doc_simhash_pairs", _o_simhash_pairs)

@@ -7,20 +7,35 @@ checkpoints (test/validate_sampling.py:158-216, challenge_utils.py:
 parquet checkpoint; a resumed run reads any stage whose checkpoint is
 complete (parquet ``_SUCCESS``) instead of recomputing, so a kill at
 any stage boundary resumes to byte-identical output. A manifest
-records stage order + row counts; a metrics table records per-stage,
+records the stages + row counts; a metrics table records per-stage,
 per-partition row counts (lineage) plus the per-row content-sha
 integrity check.
 
 Stage DAG (one wide shuffle each; SURVEY.md §7):
-  closure → cells → candidates → entity_types → cea → cta → cpa → triples
+  closure → entity_types
+  cells → candidates, cells_m
+  cells_m, candidates, entity_types → cea → cta, cpa
+  cells, cea, cta → triples
+
+Every mode runs the same schedule: each stage is one task on one
+thread pool and blocks only on the futures of its inputs. Stages are
+submitted in ``STAGES`` order, which is topological, and the pool has
+a worker per task, so independent stages overlap (the Python-worker-
+bound candidate scorer next to the JVM-bound ``cells_m`` join, the
+dims-only ``entity_types`` next to the whole cells chain) and a stage
+blocked on its inputs never keeps those inputs from starting. The
+modes differ only in how ``_Checkpointer`` stores a stage.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,12 +65,6 @@ class PipelineResult:
     stages: dict[str, DataFrame] = field(default_factory=dict)
     metrics: list[dict] = field(default_factory=list)
 
-    def __getattr__(self, name: str) -> DataFrame:
-        try:
-            return self.stages[name]
-        except KeyError as e:  # pragma: no cover
-            raise AttributeError(name) from e
-
 
 # stages whose output is consumed by 2+ downstream branches AND carries
 # pandas-UDF columns (Catalyst re-evaluates Python UDFs per reference):
@@ -63,13 +72,16 @@ class PipelineResult:
 # flows lazily into one AQE-planned DAG — the answer to the round-1
 # stage-barrier tax (8 sequential full materializations → 3).
 # cells: the mapInPandas CSV parse, consumed by candidates + emission.
+# candidates: the fuzzy-scoring subtree, materialized by one action of
+# its own so that it runs next to cells_m instead of inside cea's write
+# (and so generate_candidates may fuse its internal barriers away).
 # ALL fused barriers are parquet-backed (barriers.py): a parquet scan
 # carries real size statistics, so Catalyst broadcasts a barrier that
 # is small and shuffle-joins one that is not — the scale-appropriate
 # plan falls out of the stats instead of per-join hints. (A
 # localCheckpoint scan has NO stats and is treated as enormous, which
 # inverted broadcast choices — see operators/annotate.py history.)
-_FUSED_BARRIERS = {"cells", "cells_m", "entity_types", "cea"}
+_FUSED_BARRIERS = {"cells", "candidates", "cells_m", "entity_types", "cea"}
 
 
 class _Checkpointer:
@@ -80,6 +92,13 @@ class _Checkpointer:
         self.resume = resume
         self.materialize = materialize
         self.metrics: list[dict] = []
+
+    def done(self, name: str) -> bool:
+        """True when ``name`` will be read from its checkpoint."""
+        return (
+            self.resume and self.root is not None
+            and os.path.exists(os.path.join(self.root, name, "_SUCCESS"))
+        )
 
     def stage(self, name: str, compute, extra_metric=None) -> DataFrame:
         # label every job this stage triggers (AQE/broadcast subjobs
@@ -107,8 +126,7 @@ class _Checkpointer:
                 return parquet_barrier(compute(), name)
             return compute()
         path = os.path.join(self.root, name)
-        done = os.path.exists(os.path.join(path, "_SUCCESS"))
-        if self.resume and done:
+        if self.done(name):
             df = self.spark.read.parquet(path)
             self.metrics.append({"stage": name, "resumed": True})
             return df
@@ -155,6 +173,19 @@ class _Checkpointer:
             json.dump({"stages": STAGES, "metrics": self.metrics}, f, indent=1)
 
 
+def _once(fn):
+    """``fn()`` computed by the first caller on any thread, then shared."""
+    lock = threading.Lock()
+    box: list = []
+
+    def get():
+        with lock:
+            if not box:
+                box.append(fn())
+            return box[0]
+    return get
+
+
 def run_pipeline(
     spark: SparkSession,
     dfs: dict[str, DataFrame],
@@ -176,68 +207,23 @@ def run_pipeline(
     the driver-contract registry).
     """
     ck = _Checkpointer(spark, checkpoint_dir, resume, materialize)
-    # measured at sf0.1: the candidates operator's internal barriers
-    # (index_keys/exact) can be fused away in one-action mode (~8%
-    # faster), but cea/emit internal barriers must STAY — without
-    # them the un-materialized fuzzy-scoring subtree is re-executed
-    # per consumer (2-3× slower) and ReuseExchange does not collapse
-    # the near-identical exchanges.
-    cand_fused = checkpoint_dir is None and materialize != "all"
-    fused = False  # cea/emit internal barriers kept (see above)
-    res = PipelineResult()
-    # share the checkpointer's live metrics list so every stop_after
-    # early return carries the lineage/sha-integrity metrics collected
-    # so far (they were previously only attached on full completion)
-    res.metrics = ck.metrics
+    futures: dict[str, Future] = {}
 
-    def upto(name: str) -> bool:
-        return stop_after is not None and STAGES.index(name) > STAGES.index(stop_after)
+    def get(name: str) -> DataFrame:
+        return futures[name].result()
 
-    res.stages["closure"] = ck.stage(
-        "closure",
-        lambda: build_closure(dfs["ontology_edges"], dfs["ontology_equivalent"]),
-    )
-    if upto("cells"):
-        ck.finish()
-        return res
-
-    # entity_types depends only on closure + the corpus dims — not on
-    # the cells/candidates chain. In fused (no-checkpoint) mode its
-    # eager barrier is submitted on a pool driver thread HERE, before
-    # the cells parse, so its jobs interleave with the whole
-    # cells→bridge→candidates→cells_m front half: the scheduler
-    # backfills cores that single-stage tails leave idle. This cuts
-    # the sequential-action floor (the dominant term in the N→4N
-    # scaling gap at bench scale) without changing any plan — on a
-    # real cluster these are just concurrently-submitted job groups.
-    # Checkpointed runs stay sequential: stage order in the manifest
-    # is part of the resume contract.
-    et_future = cand_future = rp_future = _pool = None
-    if (
-        checkpoint_dir is None
-        and materialize != "all"
-        and not upto("entity_types")
-        and os.environ.get("TDS_NO_CONCURRENT_STAGES") != "1"
-    ):
-        from concurrent.futures import ThreadPoolExecutor
-
-        closure_df = res.stages["closure"]
-        closure_map = closure_to_map(closure_df)
-        _pool = ThreadPoolExecutor(max_workers=3)
-        et_future = _pool.submit(
-            ck.stage,
-            "entity_types",
-            lambda: build_entity_types(
-                dfs["entity_index"], dfs["kg_triples"], dfs["property_meta"],
-                closure_df, closure_map,
-            ),
-        )
+    # each runs once, for whichever stage needs it first; a resumed
+    # cells_m + candidates pair never writes a mention_bridge barrier
+    closure_map = _once(lambda: closure_to_map(get("closure")))
+    cells_m_and_candidates = _once(lambda: generate_candidates(
+        data_cells(get("cells")), dfs["entity_index"], fused=True
+    ))
 
     # per-row content-sha integrity (BASELINE.json input_hint
     # invariant): every (path, content_sha) seen in cells must equal
     # the sha2 of the source row's content. Folded into the cells
     # stage's lineage collect — one driver action, not two.
-    def _sha_integrity(cells_out: DataFrame) -> DataFrame:
+    def sha_integrity(cells_out: DataFrame) -> DataFrame:
         # join on the source table's NATURAL key (repo, path) — path
         # alone collides across repos in a multi-repo corpus and would
         # report false mismatches on intact data
@@ -255,147 +241,66 @@ def run_pipeline(
             .select(F.lit("sha_integrity").alias("metric"), "n")
         )
 
-    def _abort_pool() -> None:
-        # A failure anywhere between et_future submission and its
-        # .result() must not leave the non-daemon worker thread
-        # running Spark jobs (interpreter exit would block on it):
-        # cancel whatever has not started and drop the queue.
-        # cancel() on an already-running future is best-effort, but
-        # shutdown(cancel_futures=True) guarantees nothing new starts.
-        for fut in (et_future, cand_future, rp_future):
-            if fut is not None:
-                fut.cancel()
-        if _pool is not None:
-            _pool.shutdown(wait=False, cancel_futures=True)
+    computes = {
+        "closure": lambda: build_closure(
+            dfs["ontology_edges"], dfs["ontology_equivalent"]
+        ),
+        "cells": lambda: parse_cells(discover_csv_artifacts(dfs["source_repos"])),
+        "candidates": lambda: cells_m_and_candidates()[1],
+        # cells + mention_norm, consumed by CEA here and by the
+        # fragment query — a first-class stage so that a resumed run
+        # reads it instead of re-running the bridge normalization
+        # subtree, which re-scans the full cell table and would
+        # otherwise execute once per consumer (~25-30 s CPU at the
+        # sf2.5 scaling corpus)
+        "cells_m": lambda: cells_m_and_candidates()[0],
+        "entity_types": lambda: build_entity_types(
+            dfs["entity_index"], dfs["kg_triples"], dfs["property_meta"],
+            get("closure"), closure_map(),
+        ),
+        # cea/emit keep their internal barriers (fused=False): without
+        # them the fuzzy-scoring subtree is re-executed per consumer
+        # (2-3× slower at sf0.1) and ReuseExchange does not collapse
+        # the near-identical exchanges
+        "cea": lambda: cea_op(
+            get("cells_m"), get("candidates"), get("entity_types")
+        ),
+        "cta": lambda: cta_op(
+            get("cea"), get("entity_types"),
+            make_most_specific_udf(closure_map(), AGENT_CLASS), get("closure"),
+        ),
+        "cpa": lambda: cpa_op(get("cea"), dfs["kg_triples"]),
+        "triples": lambda: emit_triples(
+            get("cells"), get("cea"), get("cta"),
+            rows_present=get("rows_present"),
+        ),
+    }
+    names = STAGES if stop_after is None else STAGES[: STAGES.index(stop_after) + 1]
+    # the emission row spine depends only on cells: materialized next
+    # to the candidates/CEA chain instead of inside the triples stage
+    early_spine = "triples" in names and not ck.done("triples")
+    pool = ThreadPoolExecutor(max_workers=len(names) + early_spine)
+
+    def submit(fn, *args) -> Future:
+        # the caller's job group, scheduler pool etc. carry over to the
+        # stage's thread; each submit takes its own copy, since the
+        # stage sets its job description in it
+        return pool.submit(inheritable_thread_target(spark)(fn), *args)
 
     try:
-        res.stages["cells"] = ck.stage(
-            "cells",
-            lambda: parse_cells(discover_csv_artifacts(dfs["source_repos"])),
-            extra_metric=_sha_integrity if checkpoint_dir is not None else None,
-        )
-        cells = res.stages["cells"]
-        if _pool is not None and stop_after is None:
-            # the emission row spine depends only on cells — its
-            # barrier (profiled 5-9 s at the sf2.5 scaling corpus)
-            # overlaps the whole candidates/CEA chain instead of
-            # running serially inside the triples stage
-            rp_future = _pool.submit(
-                lambda: build_rows_present(cells, fused=False)
+        for name in names:
+            futures[name] = submit(
+                ck.stage, name, computes[name],
+                sha_integrity if name == "cells" else None,
             )
-
-        if upto("candidates"):
-            ck.finish()
-            return res
-        data = data_cells(cells)
-        cells_m_holder: dict[str, DataFrame] = {}
-
-        def _gen_candidates() -> tuple[DataFrame, DataFrame]:
-            cm, cand = generate_candidates(
-                data, dfs["entity_index"], fused=cand_fused
-            )
-            cells_m_holder["cells_m"] = cm
-            return cm, cand
-
-        if _pool is not None:
-            cm_lazy, cand_lazy = _gen_candidates()  # writes mention_bridge
-            # candidates materialized eagerly HERE (it is lazy in the
-            # sequential fused path): the fuzzy-scoring subtree is
-            # Python-worker-bound while cells_m's prenorm+bridge join is
-            # JVM-shuffle-bound — run on separate driver threads they
-            # overlap on complementary resources instead of executing
-            # back-to-back inside cea_linked's write.
-            cand_future = _pool.submit(
-                ck.stage, "candidates",
-                lambda: parquet_barrier(cand_lazy, "candidates"),
-            )
-            _pool.shutdown(wait=False)
-            res.stages["cells_m"] = ck.stage("cells_m", lambda: cm_lazy)
-            res.stages["candidates"] = cand_future.result()
-        else:
-            res.stages["candidates"] = ck.stage(
-                "candidates", lambda: _gen_candidates()[1]
-            )
-            if upto("cells_m"):
-                ck.finish()
-                return res
-            # cells + mention_norm, consumed by CEA here and by the
-            # fragment query — a first-class resumable stage: a resumed
-            # run reads the checkpoint instead of re-running the bridge
-            # normalization subtree (VERDICT r02 #6). In no-checkpoint
-            # modes it is eagerly materialized for the same reason: the
-            # subtree re-scans the full cell table through the prenorm
-            # expressions and the bridge join, which would otherwise
-            # execute once per consumer (measured ~25-30 s CPU duplicated
-            # at the sf2.5 scaling corpus).
-            res.stages["cells_m"] = ck.stage(
-                "cells_m",
-                lambda: cells_m_holder.get("cells_m")
-                if "cells_m" in cells_m_holder
-                else _gen_candidates()[0],
-            )
-        cells_m = res.stages["cells_m"]
-
-        if et_future is None:
-            closure_map = closure_to_map(res.stages["closure"])
-
-        if upto("entity_types"):
-            ck.finish()
-            return res
-        if et_future is not None:
-            res.stages["entity_types"] = et_future.result()
-        else:
-            res.stages["entity_types"] = ck.stage(
-                "entity_types",
-                lambda: build_entity_types(
-                    dfs["entity_index"], dfs["kg_triples"], dfs["property_meta"],
-                    res.stages["closure"], closure_map,
-                ),
-            )
-        # the guard extends through the triples stage: rp_future may
-        # still be running anywhere in the cea→triples region (the
-        # upto() early returns below cannot race it — rp_future is
-        # only submitted when stop_after is None)
-        if upto("cea"):
-            ck.finish()
-            return res
-        res.stages["cea"] = ck.stage(
-            "cea",
-            lambda: cea_op(
-                cells_m, res.stages["candidates"], res.stages["entity_types"],
-                fused=fused,
-            ),
-        )
-        if upto("cta"):
-            ck.finish()
-            return res
-        ms_udf = make_most_specific_udf(closure_map, AGENT_CLASS)
-        res.stages["cta"] = ck.stage(
-            "cta",
-            lambda: cta_op(
-                res.stages["cea"], res.stages["entity_types"], ms_udf,
-                res.stages["closure"],
-            ),
-        )
-        if upto("cpa"):
-            ck.finish()
-            return res
-        res.stages["cpa"] = ck.stage(
-            "cpa", lambda: cpa_op(res.stages["cea"], dfs["kg_triples"])
-        )
-        if upto("triples"):
-            ck.finish()
-            return res
-        res.stages["triples"] = ck.stage(
-            "triples",
-            lambda: emit_triples(
-                cells, res.stages["cea"], res.stages["cta"], fused=fused,
-                rows_present=rp_future.result() if rp_future is not None
-                else None,
-            ),
-        )
-    except BaseException:
-        _abort_pool()
-        raise
+            if name == "cells" and early_spine:
+                futures["rows_present"] = submit(
+                    lambda: build_rows_present(get("cells"))
+                )
+        res = PipelineResult({n: get(n) for n in names}, ck.metrics)
+    finally:
+        # a failed stage fails every stage that reads it; the rest run
+        # to completion here, so no pool thread outlives the call
+        pool.shutdown(wait=True, cancel_futures=True)
     ck.finish()
     return res

@@ -198,9 +198,9 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    # profiling hook (scripts/profile_scaling.py): uncompressed event
-    # log so the task-metrics post-processor can attribute wall to
-    # stages without a zstd dependency
+    # profiling hook (perfbench/run.py --trace 1): uncompressed event
+    # log so the task-metrics rollup can attribute wall to stages
+    # without a zstd dependency
     evt_dir = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
     if evt_dir:
         os.makedirs(evt_dir, exist_ok=True)
